@@ -149,16 +149,17 @@ def main(argv: list[str] | None = None) -> int:
         signal.alarm(0)
         shutil.rmtree(work, ignore_errors=True)
 
+    stamp = _stamp(run.cores, args.seed)
     if args.trace:
         print(result["dominant_layer"])
         traces = ROOT / ".bench_work" / "traces"
         traces.mkdir(parents=True, exist_ok=True)
         (traces / f"{args.workload}-seed{args.seed}.json").write_text(
-            json.dumps({"spans": run.tracer.spans,
+            json.dumps({"stamp": stamp, "spans": run.tracer.spans,
                         "metrics": {k: v for k, (v, _) in
                                     result["metrics"].items()}}, indent=1))
     record = {
-        "stamp": _stamp(run.cores, args.seed),
+        "stamp": stamp,
         "workload": args.workload,
         "walls_s": result.get("walls_s"),
         "phases_s": run.phases,
