@@ -297,6 +297,12 @@ def q_extract_recap_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REF_ASSETS = "/root/reference/doctor/test_assets"
 
+
+class ReferenceAssetsMissing(FileNotFoundError):
+    """doctor's fixture files are not on this host, so the
+    ``reference_fixtures`` query cannot run."""
+
+
 # literal goldens from the reference's own test suite
 # (doctor/tests.py:114-242, 301-378, 416-465); OCR-output goldens are
 # excluded (tesseract is a pluggable backend, absent in this sandbox)
@@ -368,8 +374,15 @@ def q_reference_fixtures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = []
     for n in names:
-        with open(f"{_REF_ASSETS}/{n}", "rb") as f:
-            rows.append((n, f.read()))
+        try:
+            with open(f"{_REF_ASSETS}/{n}", "rb") as f:
+                rows.append((n, f.read()))
+        except FileNotFoundError as exc:
+            raise ReferenceAssetsMissing(
+                f"doctor's test assets are missing: {_REF_ASSETS} (no {n}); "
+                "byte-identity against doctor's real fixtures is unverified "
+                "without them"
+            ) from exc
     paths = spark.createDataFrame(
         rows, "fixture string, payload binary"
     ).repartition(8)

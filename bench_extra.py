@@ -17,9 +17,30 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import sys
 import time
 from pathlib import Path
+
+# an entry starts at the text's start or at a comma followed by ``key=``,
+# so a value may itself hold commas (e.g. a list of JVM options)
+_ENTRY_START = re.compile(r",(?=\s*[A-Za-z_][\w.\-]*\s*=)")
+
+
+def parse_extra_conf(text: str) -> dict[str, str]:
+    """``k1=v1,k2=v2`` → ``{"k1": "v1", "k2": "v2"}``.  A comma splits
+    entries only where the next ``key=`` starts; an entry with no ``=``
+    raises ``ValueError`` naming it."""
+    text = text.strip()
+    conf = {}
+    for entry in _ENTRY_START.split(text) if text else []:
+        k, eq, v = entry.partition("=")
+        if not eq or not k.strip():
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF entry {entry!r} is not key=value"
+            )
+        conf[k.strip()] = v.strip()
+    return conf
 
 
 def main() -> None:
@@ -45,9 +66,7 @@ def main() -> None:
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
     }
     # ad-hoc conf A/B: SPARK_GRAFT_EXTRA_CONF="k1=v1,k2=v2"
-    for kv in filter(None, os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(",")):
-        k, _, v = kv.partition("=")
-        conf[k.strip()] = v.strip()
+    conf.update(parse_extra_conf(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")))
     spark = get_spark("doctor_spark-bench-extra", cores=cpus, extra_conf=conf)
     # same warmup as bench.py
     for t in ("documents", "embeddings", "events", "lineitem", "orders"):

@@ -1,10 +1,13 @@
-"""The batch extraction pipeline: scan → classify → skew-repartition →
+"""The batch extraction pipeline: scan → classify → range-repartition →
 extract (Arrow UDF) → write + metrics + lineage, resumable by url.
 
-Topology (north_star): explicit salted size-bucketed repartition isolates
-giant documents; AQE handles residual skew; extraction is embarrassingly
-parallel (no shuffle after the repartition); metrics/lineage are built-in
-hash aggregates over the written results.
+Topology (north_star): when the pipeline shuffles, one range exchange on
+(crawl day, url salt) clusters each task's rows by the output partition,
+so a task writes a few date files instead of one per date, while the
+salt keeps every day (even a single-day input) spread across tasks;
+extraction is embarrassingly parallel (no shuffle after the
+repartition); metrics/lineage are built-in hash aggregates over the
+written results.
 
 Resume: re-running with the same ``out_dir`` anti-joins the input against
 already-extracted urls — idempotent, manifest-free (the written parquet IS
@@ -28,7 +31,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .corpus import pages_dataframe
-from .operators.classify import skew_repartition, with_classification
+from .operators.classify import with_classification
 
 _LOG = logging.getLogger("doctor_spark.pipeline")
 from .operators.extract import extract_operator
@@ -63,7 +66,9 @@ def _is_fresh_start_error(exc: BaseException) -> bool:
     if not isinstance(exc, AnalysisException):
         return False
     cls = None
-    get = getattr(exc, "getErrorClass", None)
+    # getCondition (Spark 4) first: getErrorClass is its deprecated alias
+    # and warns on every call
+    get = getattr(exc, "getCondition", None) or getattr(exc, "getErrorClass", None)
     if callable(get):
         try:
             cls = get()
@@ -174,8 +179,13 @@ def run_extraction_pipeline(
 ) -> dict:
     """Run the full pipeline; returns summary counters.
 
-    ``repartition`` controls the salted size-bucketed shuffle before
-    extraction:
+    ``repartition`` controls the range shuffle before extraction into
+    ``num_partitions`` tasks (default: 3 × default parallelism, at least
+    8).  The range key is (crawl day, url salt) when the output is
+    partitioned by ``crawl_date`` and the salt alone otherwise.  Each
+    task then covers a contiguous slice of days, so the partitioned
+    write opens at most tasks + days − 1 files instead of tasks × days,
+    and rows stay balanced per task even when the input holds one day:
 
     - ``"auto"`` (default): shuffle only when the scan yields too few
       partitions to keep the cluster busy.  Parquet/WARC byte-based splits
@@ -231,7 +241,13 @@ def run_extraction_pipeline(
         repartition is True
         or (repartition == "auto" and scan_partitions < target // 2)
     )
-    staged = skew_repartition(classified, target) if do_shuffle else classified
+    crawl_date = F.date_format("warc_ts", "yyyy-MM-dd")
+    staged = classified
+    if do_shuffle:
+        keys = [F.col("salt")]
+        if partition_output_by == "crawl_date":
+            keys.insert(0, crawl_date)
+        staged = classified.repartitionByRange(target, *keys)
     extracted = (
         extract_operator(
             staged,
@@ -248,14 +264,15 @@ def run_extraction_pipeline(
         # crawl day so downstream readers prune by date (the analog of an
         # Iceberg warc_ts day-partition spec; at 10^12 rows this is the
         # difference between scanning one day's and three years' output)
-        writer = extracted.withColumn(
-            "crawl_date", F.date_format("warc_ts", "yyyy-MM-dd")
-        )
+        writer = extracted.withColumn("crawl_date", crawl_date)
         if output_file_buckets:
             # CLUSTER/OBJECT-STORE MODE: route rows to writers BY DATE
-            # before the partitioned write.  Without it every task opens
-            # a writer for every date it sees — T tasks × D dates output
-            # files, which at 1000 executors × 1000 days is a
+            # before the partitioned write.  The shuffle path above
+            # already clusters by date before extraction (at most
+            # tasks + days − 1 files), so this only matters on the
+            # map-only path, where every task opens a writer for every
+            # date it sees — T tasks × D dates output files, which at
+            # 1000 executors × 1000 days is a
             # 10^6-small-files-per-day explosion (and a committer-rename
             # storm on S3-style stores).  A deterministic url-hash bucket
             # caps files at buckets/date while keeping per-date write
@@ -409,8 +426,9 @@ def main() -> None:
                     help="salt for --sample-band hashing")
     ap.add_argument("--output-file-buckets", type=int, default=None,
                     help="pre-write repartition to N url-hash buckets per "
-                         "output date partition (real-cluster committer "
-                         "pressure; costs a shuffle — off by default)")
+                         "output date partition on the map-only path "
+                         "(real-cluster committer pressure; costs a "
+                         "shuffle — off by default)")
     args = ap.parse_args()
 
     from .session import get_spark

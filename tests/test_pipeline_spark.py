@@ -1,5 +1,8 @@
-"""Spark end-to-end: corpus → classify → skew repartition → extract UDF →
+"""Spark end-to-end: corpus → classify → range repartition → extract UDF →
 write/metrics/lineage → byte-identical verify → resume."""
+
+import warnings
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,6 +12,7 @@ from doctor_spark.operators.classify import with_classification
 from doctor_spark.pipeline import run_extraction_pipeline, verify_extraction
 
 N = 200
+RANGE_TASKS = 4
 
 
 @pytest.fixture(scope="module")
@@ -62,6 +66,70 @@ def test_pipeline_end_to_end(spark, pages, tmp_path_factory):
     assert summary2["total_rows"] == N
     results = spark.read.parquet(summary2["results_path"])
     assert results.select("url").distinct().count() == N
+
+
+def test_range_shuffle_writes_few_files_per_task(spark, pages, tmp_path):
+    """The range exchange on (crawl day, salt) gives each task a
+    contiguous slice of days: at most tasks + days - 1 part files, where a
+    hash exchange writes up to tasks x days.  A resumed run on the same
+    output extracts nothing new and duplicates no url."""
+    out = str(tmp_path / "ranged")
+    summary = run_extraction_pipeline(
+        spark, pages, out, run_id="rg", repartition=True,
+        num_partitions=RANGE_TASKS,
+    )
+    files = list(Path(summary["results_path"]).rglob("part-*.parquet"))
+    days = pages.select(F.date_format("warc_ts", "yyyy-MM-dd")).distinct().count()
+    assert days >= 10
+    assert summary["total_rows"] == N
+    assert 0 < len(files) <= RANGE_TASKS + days - 1, (len(files), days)
+    assert verify_extraction(spark, pages, summary["results_path"]) == 0
+
+    again = run_extraction_pipeline(
+        spark, pages, out, run_id="rg2", repartition=True,
+        num_partitions=RANGE_TASKS,
+    )
+    assert again["resumed_skip"] == N
+    assert again["total_rows"] == N
+    results = spark.read.parquet(again["results_path"])
+    assert results.count() == results.select("url").distinct().count() == N
+
+
+def test_range_shuffle_spreads_a_single_day(spark, pages, tmp_path):
+    """The salt in the range key keeps one crawl day spread across tasks;
+    a key on the date alone would put the whole input in one task."""
+    one_day = pages.withColumn(
+        "warc_ts", F.to_timestamp(F.lit("2024-03-01 12:00:00"))
+    )
+    out = str(tmp_path / "one_day")
+    summary = run_extraction_pipeline(
+        spark, one_day, out, run_id="d1", repartition=True,
+        num_partitions=RANGE_TASKS,
+    )
+    assert summary["total_rows"] == N
+    lineage = spark.read.parquet(f"{out}/lineage")
+    assert lineage.select("partition_id").distinct().count() > 1
+
+
+def test_fresh_start_emits_no_future_warning(spark, tmp_path):
+    """The fresh-start probe reads the error condition without the
+    deprecated getErrorClass, which warns on every call."""
+    from doctor_spark.pipeline import resume_done_urls
+
+    pages = pages_dataframe(spark, 20, partitions=1)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        summary = run_extraction_pipeline(
+            spark, pages, str(tmp_path / "out"), run_id="fw"
+        )
+    assert summary["resumed_skip"] == 0
+    assert summary["total_rows"] == 20
+    # a raised warning would be swallowed by the probe's fallback, so also
+    # check that none is emitted at all
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", FutureWarning)
+        assert resume_done_urls(spark, str(tmp_path / "none"), pages) is None
+    assert not [w for w in caught if issubclass(w.category, FutureWarning)]
 
 
 def test_no_python_in_relational_plan(spark, pages):
