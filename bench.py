@@ -52,7 +52,6 @@ def _materialize_corpus(spark, n_docs: int, cpus: int) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = _sf_from_dir(sf_dir)
     n_docs = max(MIN_DOCS, int(DOCS_PER_SF * sf))
 
@@ -63,9 +62,10 @@ def main() -> None:
         with_classification,
     )
     from doctor_spark.operators.extract import extract_operator
-    from doctor_spark.session import get_spark
+    from doctor_spark.session import default_cores, get_spark
     from pyspark.sql import functions as F
 
+    cpus = default_cores()
     spark = get_spark("doctor_spark-bench", cores=cpus, extra_conf={
         # CPU-bound Python extraction wants many small byte-balanced input
         # splits and fat Arrow batches (see BENCH/BASELINE.md)

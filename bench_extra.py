@@ -55,12 +55,12 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     sys.path.insert(0, str(Path(__file__).resolve().parent))
     import __spark_entry__ as entry
-    from doctor_spark.session import get_spark
+    from doctor_spark.session import default_cores, get_spark
 
+    cpus = default_cores()
     conf = {
         "spark.sql.files.maxPartitionBytes": str(4 * 1024 * 1024),
         "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",

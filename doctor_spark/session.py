@@ -8,9 +8,45 @@ set identically in ``spark-submit --conf`` on a real cluster.
 from __future__ import annotations
 
 import os
-import re
+import site
 
 from pyspark.sql import SparkSession
+
+WORKER_DAEMON = "doctor_spark.worker_daemon"
+
+
+def default_cores() -> int:
+    """``$SPARK_GRAFT_CPUS``, else the number of CPUs this process may run
+    on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS")
+               or len(os.sched_getaffinity(0)))
+
+
+def _importable_by_fresh_python() -> bool:
+    """Whether a fresh ``python`` in this environment imports this package:
+    its root is a ``PYTHONPATH`` entry, the working directory (``python -m``
+    puts it first) or a site-packages directory.  The JVM starts the Python
+    daemon with this process's environment and working directory."""
+    root = os.path.realpath(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    entries = [
+        *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+        os.getcwd(),
+        *site.getsitepackages(),
+        site.getusersitepackages(),
+    ]
+    return any(e and os.path.realpath(e) == root for e in entries)
+
+
+def worker_daemon_conf(submitted: bool) -> dict[str, str]:
+    """``spark.python.daemon.module`` set to :mod:`doctor_spark.worker_daemon`
+    when this process starts the JVM itself and the daemon can import this
+    package before any task ships it; empty otherwise, which keeps Spark's
+    own daemon.  Under ``spark-submit --py-files`` the package reaches the
+    workers only per task, after the daemon has started."""
+    if submitted or not _importable_by_fresh_python():
+        return {}
+    return {"spark.python.daemon.module": WORKER_DAEMON}
 
 
 def get_spark(
@@ -27,6 +63,9 @@ def get_spark(
       document payloads cannot blow Python-worker memory (the analog of the
       reference's LZW-rasterization memory bound, tasks.py:100-106).
     - UTC session TZ so DuckDB oracle comparisons are stable.
+    - Python workers forked from :mod:`doctor_spark.worker_daemon`, which
+      keeps Spark's zip archives off their ``sys.path`` (see
+      :func:`worker_daemon_conf`).
     """
     # Respect a master chosen by the LAUNCHER: under spark-submit the
     # `--master` flag lands in SparkConf as spark.master, and an explicit
@@ -36,7 +75,7 @@ def get_spark(
     # `cores=` argument or SPARK_GRAFT_CPUS/SPARK_GRAFT_MASTER env still
     # wins, for tests and the in-process bench.
     submitted = "PYSPARK_GATEWAY_PORT" in os.environ  # pre-launched JVM
-    n = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    n = cores or default_cores()
     if submitted:
         # Under a submitted JVM, ONLY an explicit SPARK_GRAFT_MASTER may
         # override the launcher's --master.  cores= / SPARK_GRAFT_CPUS are
@@ -63,7 +102,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**worker_daemon_conf(submitted), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1228,3 +1228,29 @@ def test_soft404_gate_map_only_jvm(spark):
     q = entry.queries()["soft404_gate"](spark, SF)
     assert_jvm_only(q)
     assert count_exchanges(q) == 0, physical_plan(q)
+
+
+@pytest.mark.parametrize("files_per_target, exchanges", [(1, 0), (0.5, 1)])
+def test_spread_scan_floor(spark, tmp_path, files_per_target, exchanges):
+    """``_spread_scan`` is a floor, not a fixed shuffle: a scan that
+    already has ``2 x defaultParallelism`` splits stays exchange-free, and
+    a narrower one gets exactly one round-robin exchange."""
+    import __spark_entry__ as entry
+
+    target = 2 * spark.sparkContext.defaultParallelism
+    n_files = int(target * files_per_target)
+    path = str(tmp_path / "many_files.parquet")
+    spark.range(n_files * 50).repartition(n_files).write.parquet(path)
+    # every small file its own split, so split count == file count
+    key = "spark.sql.files.openCostInBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    try:
+        q = entry._spread_scan(spark, path)
+        splits = spark.read.parquet(path).rdd.getNumPartitions()
+        assert splits == n_files, splits
+        assert count_exchanges(q) == exchanges, physical_plan(q, "simple")
+        if exchanges:
+            assert "RoundRobinPartitioning" in physical_plan(q, "simple")
+    finally:
+        spark.conf.set(key, before)

@@ -6,6 +6,7 @@ BENCH/BASELINE.md robustness notes), never by in-process tests."""
 import os
 import shutil
 import subprocess
+import tempfile
 import unittest
 from pathlib import Path
 
@@ -15,6 +16,9 @@ REPO = Path(__file__).resolve().parent.parent
 @unittest.skipUnless(shutil.which("spark-submit"), "spark-submit not on PATH")
 class TestSparkSubmit(unittest.TestCase):
     def test_submit_extraction_smoke(self):
+        """Run from a directory outside the repo with ``PYTHONPATH`` unset,
+        so the workers can import ``doctor_spark`` only from the
+        ``--py-files`` zip."""
         out = "/tmp/doctor_spark_submit_smoke"
         shutil.rmtree(out, ignore_errors=True)
         env = dict(
@@ -23,15 +27,17 @@ class TestSparkSubmit(unittest.TestCase):
             DRIVER_MEM="4g",
             NUM_EXECUTORS="",
         )
+        env.pop("PYTHONPATH", None)
         # synthetic corpus mode: run_extraction accepts corpus=synth:<n>
-        proc = subprocess.run(
-            [str(REPO / "scripts/submit_extraction.sh"), "synth:300", out],
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=420,
-            cwd=str(REPO),
-        )
+        with tempfile.TemporaryDirectory() as cwd:
+            proc = subprocess.run(
+                [str(REPO / "scripts/submit_extraction.sh"), "synth:300", out],
+                env=env,
+                capture_output=True,
+                text=True,
+                timeout=420,
+                cwd=cwd,
+            )
         assert proc.returncode == 0, proc.stderr[-4000:]
         assert (Path(out) / "extracted").exists(), proc.stdout[-2000:]
         assert '"golden_mismatches": 0' in proc.stdout, proc.stdout[-2000:]
