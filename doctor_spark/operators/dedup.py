@@ -1,8 +1,10 @@
 """Deduplication operators for training-data pipelines.
 
-All four families from the task brief, composed from built-in DataFrame ops
-(no Python UDFs — hashing via ``md5``, set algebra via higher-order array
-functions, candidate generation via hash-key self-joins):
+All four families from the task brief.  Candidate generation is a
+hash-key self-join and set algebra runs on built-in DataFrame ops; the
+per-document kernels (shingling, MinHash signatures and band keys) are
+Arrow UDFs built on one shared shingle helper, with JVM expression forms
+kept as their test references:
 
 - exact:            md5-of-normalized-text groupBy
 - MinHash + LSH:    k seeded min-hashes → bands → bucket self-join
@@ -17,6 +19,8 @@ MinHash-LSH at 10^12 rows.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
@@ -37,6 +41,31 @@ def _java_ws_tokens(text: str) -> list[str]:
     # regexp_split_to_array does too — a doc ending in '\n' tokenizes to
     # [..., ''] on all three engines
     return _JAVA_WS.split(text.strip(" ").lower())
+
+
+def _distinct_shingles(text: str | None, n: int) -> list[str] | None:
+    """The distinct ``n``-token shingles of ``text`` in first-occurrence
+    order, or None when it has fewer than ``n`` Java-``\\s`` tokens — the
+    tokenize-and-shingle step the MinHash and shingle kernels share."""
+    toks = _java_ws_tokens(text or "")
+    if len(toks) < n:
+        return None
+    return list(
+        dict.fromkeys(" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1))
+    )
+
+
+def _md5_hex(s: str) -> str:
+    return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+
+def _band_keys(values: list[str], rows_per_band: int) -> list[str]:
+    """LSH band keys: md5 of the ``|``-joined values of each full band
+    (the same key :func:`minhash_band_keys` builds in the JVM)."""
+    return [
+        _md5_hex("|".join(values[b * rows_per_band:(b + 1) * rows_per_band]))
+        for b in range(len(values) // rows_per_band)
+    ]
 
 
 def exact_duplicate_groups(
@@ -125,29 +154,17 @@ def _minhash_bands_udf(seeds: tuple[str, ...], rows_per_band: int, n: int = 3):
     min-md5 signatures → per-band md5 keys.  Docs with < n tokens return an
     empty list (posexplode then emits no rows, matching the oracle's
     WHERE len(tokens) >= n)."""
-    n_bands = len(seeds) // rows_per_band
 
     @F.pandas_udf("array<string>")
     def bands(texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        def _md5(s: str) -> str:
-            return hashlib.md5(s.encode("utf-8")).hexdigest()
-
         out = []
         for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
+            sh = _distinct_shingles(text, n)
+            if sh is None:
                 out.append([])
                 continue
-            sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
-            mh = [min(_md5(seed + s) for s in sh) for seed in seeds]
-            out.append(
-                [
-                    _md5("|".join(mh[b * rows_per_band : (b + 1) * rows_per_band]))
-                    for b in range(n_bands)
-                ]
-            )
+            mh = [min(_md5_hex(seed + s) for s in sh) for seed in seeds]
+            out.append(_band_keys(mh, rows_per_band))
         return pd.Series(out)
 
     return bands
@@ -158,17 +175,11 @@ def _affine_params(n_perms: int) -> tuple[list[int], list[int]]:
     derived from md5 so any engine can reproduce them.  a < 2^30 and odd,
     b < 2^32: products stay under 2^62, so int64/BIGINT arithmetic is
     exact on numpy AND DuckDB (no overflow, no float rounding)."""
-    import hashlib
-
     a = [
-        (int(hashlib.md5(f"a{i}".encode()).hexdigest()[:8], 16)
-         & 0x3FFFFFFF) | 1
+        (int(_md5_hex(f"a{i}")[:8], 16) & 0x3FFFFFFF) | 1
         for i in range(n_perms)
     ]
-    b = [
-        int(hashlib.md5(f"b{i}".encode()).hexdigest()[:8], 16)
-        for i in range(n_perms)
-    ]
+    b = [int(_md5_hex(f"b{i}")[:8], 16) for i in range(n_perms)]
     return a, b
 
 
@@ -198,54 +209,56 @@ def _affine_mins_chunked(h32, a, b, max_elems: int = 4_000_000):
     return mins
 
 
-def _minhash_bands_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
-    """Production-width band kernel (the Lee-et-al./Dolma operating
+def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
+    """Production-width MinHash kernel (the Lee-et-al./Dolma operating
     point): ONE md5 per shingle, then ``n_perms`` affine permutations
     ``(a_i*h + b_i) mod 2^32`` of its 32-bit prefix, numpy-vectorized.
     The md5-per-(seed,shingle) scheme the 4-seed demo uses costs
     n_perms× more digests — measured 27.5 s vs ~2 s at sf0.1 for
     width 128.  Exactly mirrored in SQL: hex-prefix→BIGINT, affine mod,
-    list min, decimal-string band join, md5."""
-    import hashlib
+    list min, decimal-string band join, md5.
 
+    One kernel evaluation yields the distinct-shingle count, the full
+    ``n_perms`` min-signature (for estimator math) and the LSH band keys
+    (for candidate generation), so the signature table is computed once,
+    the way a production dedup materializes it; each caller projects the
+    fields it needs."""
     import numpy as np
 
     a_l, b_l = _affine_params(n_perms)
     a = np.asarray(a_l, dtype=np.int64)
     b = np.asarray(b_l, dtype=np.int64)
-    n_bands = n_perms // rows_per_band
 
-    @F.pandas_udf("array<string>")
-    def bands(texts: pd.Series) -> pd.Series:
-        out = []
+    @F.pandas_udf(
+        "struct<n_sh: int, sig: array<long>, bands: array<string>>"
+    )
+    def sig_bands(texts: pd.Series) -> pd.DataFrame:
+        ns, sigs_out, bands_out = [], [], []
         for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                out.append([])
+            sh = _distinct_shingles(text, n)
+            if sh is None:
+                ns.append(0)
+                sigs_out.append([])
+                bands_out.append([])
                 continue
-            sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
             h32 = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-                    for s in sh
-                ),
+                (int(_md5_hex(s)[:8], 16) for s in sh),
                 dtype=np.int64, count=len(sh),
             )
-            mins = _affine_mins_chunked(h32, a, b)
-            out.append(
-                [
-                    hashlib.md5(
-                        "|".join(
-                            str(int(v))
-                            for v in mins[bi * rows_per_band:(bi + 1) * rows_per_band]
-                        ).encode("utf-8")
-                    ).hexdigest()
-                    for bi in range(n_bands)
-                ]
-            )
-        return pd.Series(out)
+            sig = _affine_mins_chunked(h32, a, b).tolist()
+            ns.append(len(sh))
+            sigs_out.append(sig)
+            bands_out.append(_band_keys([str(v) for v in sig], rows_per_band))
+        return pd.DataFrame({"n_sh": ns, "sig": sigs_out, "bands": bands_out})
 
-    return bands
+    # guide §4.4: a caller that filters on n_sh (a field of this UDF's
+    # output) lets the optimizer push that filter below any exchange by
+    # DUPLICATING the UDF — the signature kernel then runs twice, once
+    # below the parallelism-floor exchange on the single input split
+    # (measured: the whole containment_est wall).  Marking it
+    # non-deterministic forbids the duplication; the value is of course
+    # deterministic, only the optimizer's freedom changes.
+    return sig_bands.asNondeterministic()
 
 
 def minhash_candidate_pairs(
@@ -271,12 +284,16 @@ def minhash_candidate_pairs(
     # ~1 ms/row; hashlib in an Arrow batch is ~100× faster and md5-of-utf8
     # is bit-identical across Spark / Python / DuckDB, so the oracle holds.
     if affine_perms is not None:
-        bands_udf = _minhash_bands_affine_udf(affine_perms, rows_per_band)
+        udf = _minhash_sig_affine_udf(affine_perms, rows_per_band)
+        bands = udf(F.col("__t"))["bands"]
     else:
-        bands_udf = _minhash_bands_udf(seeds, rows_per_band)
+        bands = _minhash_bands_udf(seeds, rows_per_band)(F.col("__t"))
+    # the (id, __t) projection stays ahead of the UDF: calling it on the
+    # text column directly adds one AQE job to verified_neardup (9 → 10
+    # in a traced perfbench corpus_queries run)
     stacked = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__t"))
-        .select("id", F.posexplode(bands_udf(F.col("__t"))).alias("band_no", "band_key"))
+        .select("id", F.posexplode(bands).alias("band_no", "band_key"))
     )
     # Materialize the (tiny) banded table through ONE exchange and self-join
     # it; identical exchange subtrees on both sides become a ReusedExchange,
@@ -398,18 +415,6 @@ def with_simhash(
     return df.withColumn("simhash", sig)
 
 
-def simhash_buckets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
-) -> DataFrame:
-    """Docs grouped by identical simhash: (simhash, n_docs, keep_id)."""
-    return (
-        with_simhash(df, text_col, bits)
-        .groupBy("simhash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def _shingles_udf(n: int = 3, hashed: bool = False):
     """Arrow-batched distinct n-gram shingles, bit-identical to the JVM
     ``shingles()`` expression and the DuckDB oracle's list_transform.
@@ -421,58 +426,34 @@ def _shingles_udf(n: int = 3, hashed: bool = False):
     ``hashed``: emit the 60-bit md5 prefix of each shingle as int64
     (``int(md5(s)[:15 hex], 16)``, the same value DuckDB's
     ``('0x' || substr(md5(s), 1, 15))::BIGINT`` computes) instead of the
-    string — 8-byte shuffle keys for the join-heavy callers."""
+    string — 8-byte keys for the join-heavy callers.  n_sh then counts
+    distinct HASHES, the documented 2^-60 collision semantics."""
+    elem_type = "long" if hashed else "string"
 
-    if hashed:
-
-        @F.pandas_udf("struct<n_sh: int, sh: array<long>>")
-        def sh(texts: pd.Series) -> pd.DataFrame:
-            from hashlib import md5
-
-            ns, shs = [], []
-            for text in texts:
-                toks = _java_ws_tokens(text or "")
-                if len(toks) < n:
-                    ns.append(0)
-                    shs.append([])
-                else:
-                    seen = dict.fromkeys(
-                        int.from_bytes(
-                            md5(
-                                " ".join(toks[i : i + n]).encode()
-                            ).digest()[:8], "big",
-                        ) >> 4
-                        for i in range(len(toks) - n + 1)
-                    )
-                    ns.append(len(seen))
-                    shs.append(list(seen))
-            return pd.DataFrame({"n_sh": ns, "sh": shs})
-
-        return sh
-
-    @F.pandas_udf("struct<n_sh: int, sh: array<string>>")
+    @F.pandas_udf(f"struct<n_sh: int, sh: array<{elem_type}>>")
     def sh(texts: pd.Series) -> pd.DataFrame:
         ns, shs = [], []
         for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                ns.append(0)
-                shs.append([])
-            else:
-                seen = dict.fromkeys(
-                    " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-                )
-                ns.append(len(seen))
-                shs.append(list(seen))
+            grams = _distinct_shingles(text, n) or []
+            if hashed:
+                grams = list(dict.fromkeys(
+                    int.from_bytes(
+                        hashlib.md5(g.encode("utf-8")).digest()[:8], "big"
+                    ) >> 4
+                    for g in grams
+                ))
+            ns.append(len(grams))
+            shs.append(grams)
         return pd.DataFrame({"n_sh": ns, "sh": shs})
 
     return sh
 
 
-def _shingle_structs_expr(col, n: int = 3, hashed: bool = True):
-    """Pure-JVM equivalent of :func:`_shingles_udf`: distinct n-gram
-    shingles packed as ``array<struct<n_sh, shingle>>`` so ONE explode
-    yields both the set size and the element — no Python, no Arrow.
+def _shingle_structs_expr(col, n: int = 3):
+    """Pure-JVM equivalent of ``_shingles_udf(n, hashed=True)``: distinct
+    n-gram shingle hashes packed as ``array<struct<n_sh, shingle>>`` so
+    ONE explode yields both the set size and the element — no Python, no
+    Arrow.
 
     The naive expression form (``F.size(sh)`` + ``F.explode(sh)`` over a
     projected ``sh``) re-inlines the whole shingling expression into BOTH
@@ -483,28 +464,18 @@ def _shingle_structs_expr(col, n: int = 3, hashed: bool = True):
     evaluates ``d`` exactly once per row and references the bound ``dd``
     for free, giving the single-evaluation property in expression land.
 
-    ``hashed`` emits the 60-bit md5 prefix as int64 — bit-identical to
-    the Arrow kernel (``int(md5_hex[:15], 16)`` ==
+    Each shingle becomes its 60-bit md5 prefix as int64 — bit-identical
+    to the Arrow kernel (``int(md5_hex[:15], 16)`` ==
     ``conv(substring(md5(s), 1, 15), 16, 10)``); n_sh counts DISTINCT
     HASHES (not strings), matching the kernel's collision semantics."""
     toks = tokens(col)
-    if hashed:
-        elem_type = "long"
 
-        def elem(i):
-            return F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long")
-
-    else:
-        elem_type = "string"
-
-        def elem(i):
-            return F.concat_ws(" ", F.slice(toks, i, n))
+    def elem(i):
+        return F.conv(
+            F.substring(F.md5(F.concat_ws(" ", F.slice(toks, i, n))), 1, 15),
+            16,
+            10,
+        ).cast("long")
 
     raw = F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), elem)
     d = F.array_distinct(raw)
@@ -520,7 +491,7 @@ def _shingle_structs_expr(col, n: int = 3, hashed: bool = True):
         )
     )
     return F.when(F.size(toks) >= n, packed).otherwise(
-        F.array().cast(f"array<struct<n_sh:int,shingle:{elem_type}>>")
+        F.array().cast("array<struct<n_sh:int,shingle:long>>")
     )
 
 
@@ -717,20 +688,14 @@ def winnow_fingerprints(
     Scale shape: one Arrow kernel per batch (vectorized hashing, python
     window loop over each doc), exploded to rows — downstream matching is
     a keyed equi-join on fp."""
-    import re as _re
-
-    # the engine-wide whitespace contract is Java's \s = [ \t\n\x0b\f\r]
-    # (python \s/.strip() are unicode and would diverge on NBSP/NEL); the
-    # oracle spells the same class out because RE2's \s EXCLUDES \x0b
-    ws_re = _re.compile(r"[ \t\n\x0b\f\r]+")
 
     @F.pandas_udf("array<struct<pos: int, fp: string>>")
     def winnow(texts: pd.Series) -> pd.Series:
-        import hashlib
-
         out = []
         for text in texts:
-            t = ws_re.sub(" ", (text or "").lower().strip(" "))
+            # Java's \s class (see _JAVA_WS); the oracle spells it out
+            # because RE2's \s EXCLUDES \x0b
+            t = _JAVA_WS.sub(" ", (text or "").lower().strip(" "))
             n = len(t)
             if n < k:
                 out.append([])
@@ -772,6 +737,68 @@ def shingles(col, n: int = 3):
     )
 
 
+def _shingle_overlaps(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    n: int,
+    max_shingle_df: int | None,
+    engine: str = "hybrid",
+) -> DataFrame:
+    """The shingle inverted-index self-join shared by
+    :func:`ngram_jaccard_pairs` and :func:`containment_pairs`: every
+    pair of documents sharing at least one 60-bit-hashed shingle, with
+    both distinct-shingle counts and the intersection size.
+
+    ONE exchange on the shingle key feeds both the optional DF-cap window
+    and the self-join.  Columns: id_a, id_b, n_a, n_b, inter (id_a < id_b).
+    """
+    if engine == "hybrid":
+        exploded = df.select(
+            F.col(id_col).alias("id"),
+            _shingles_udf(n)(F.col(text_col)).alias("r"),
+        ).select(
+            "id", F.col("r.n_sh").alias("n_sh"),
+            F.explode("r.sh").alias("shingle_str"),
+        ).select(
+            "id", "n_sh",
+            F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
+            .cast("long").alias("shingle"),
+        )
+    elif engine == "expr":
+        exploded = df.select(
+            F.col(id_col).alias("id"),
+            F.explode(_shingle_structs_expr(F.col(text_col), n)).alias("r"),
+        ).select(
+            "id", F.col("r.n_sh").alias("n_sh"),
+            F.col("r.shingle").alias("shingle"),
+        )
+    else:
+        raise ValueError(f"unknown shingle engine {engine!r}")
+    exploded = exploded.repartition(F.col("shingle"))
+    if max_shingle_df is not None:
+        from pyspark.sql import Window
+
+        # whole-partition window count over the shingle partitioning the
+        # self-join below reuses — no extra shuffle
+        w = Window.partitionBy("shingle")
+        exploded = exploded.withColumn("df", F.count("*").over(w)).where(
+            F.col("df") <= max_shingle_df
+        ).drop("df")
+    a = exploded.select(
+        "shingle", F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")
+    )
+    b = exploded.select(
+        "shingle", F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")
+    )
+    return (
+        a.join(b, "shingle")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b", "n_a", "n_b")
+        .agg(F.count("*").alias("inter"))
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -779,7 +806,6 @@ def ngram_jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    hash_shingles: bool = True,
     engine: str = "hybrid",
 ) -> DataFrame:
     """Exact n-gram Jaccard over shingle-sharing candidate pairs.
@@ -804,110 +830,38 @@ def ngram_jaccard_pairs(
        web-scale corpus an uncapped hot shingle (e.g. a footer shared by
        10^6 docs) turns the self-join quadratic.
 
-    Plan shape: shingling runs in ONE Arrow batch kernel (the equivalent
-    higher-order Catalyst expression is interpreted at ~1 ms/row and gets
-    re-inlined into both join branches), behind one exchange on shingle
-    that the DF-cap window and the self-join both reuse.
+    Shingles join on the 60-bit md5 prefix of each shingle (int64), so
+    the exchange/join/window keys are 8 bytes instead of ~20-40 bytes of
+    UTF-8 — most of the shuffle at web scale.  A 2^-60-scale prefix
+    collision could merge two shingles; the cross-engine oracle applies
+    the identical hash, keeping the contract exact by construction.
 
-    ``hash_shingles`` (default True, round 5): join on the 60-bit md5
-    prefix of each shingle (int64) instead of the shingle string — the
-    exchange/join/window keys shrink from ~20-40 bytes of UTF-8 to 8
-    bytes, which is most of the shuffle at web scale.  Distinct-set
-    sizes and intersections are computed over the hashes, so a 2^-60
-    -scale prefix collision could merge two shingles; the cross-engine
-    oracle applies the identical hash, keeping the contract exact by
-    construction.  Pass False for literal string-key semantics.
+    ``engine`` selects the shingling step (see :func:`_shingle_overlaps`
+    for the shared join); both are bit-identical, differential-tested in
+    tests/test_plans.py::test_ngram_shingle_engines_bit_identical:
 
-    ``engine`` selects the shingling kernel: ``"hybrid"`` (default, see
-    below), ``"arrow"`` (the all-Python Pandas UDF: md5 via hashlib
-    inside the kernel) or ``"expr"`` (pure Catalyst higher-order expressions via
-    :func:`_shingle_structs_expr` — no Python worker in the plan at all).
-    All engines are bit-identical (differential-tested in
-    tests/test_plans.py::test_ngram_shingle_engines_bit_identical).  Measured round
-    5 at sf0.1 (interleaved, warm): arrow 2.0-2.9 s, expr 7.7-21.8 s —
-    Catalyst evaluates higher-order lambdas INTERPRETED (one
-    ``InterpretedEvaluator`` tree walk per element, with a per-shingle
-    md5→conv→substring sub-tree), so even with the single-evaluation
-    lambda-binding trick the JVM path loses 4-8× to the Arrow kernel.
-    The ``"expr"`` path stays as a cross-engine differential validator,
-    not a performance option — recorded in BENCH/BASELINE.md so later
-    rounds do not re-litigate it.
-
-    ``"hybrid"`` splits the work along the cheap/expensive seam: the
-    Arrow kernel emits distinct shingle STRINGS (tokenize + join +
-    dict.fromkeys — pure C string ops, no hashlib), and the 60-bit md5
-    lands in the JVM as ordinary codegen expressions on the EXPLODED
-    rows (``conv(substr(md5(s),1,15),16,10)`` — no higher-order lambda,
-    so none of the ``"expr"`` interpretation penalty).  The explode and
-    the hash run in the same stage, so the exchange still carries 8-byte
-    keys.  Note the hybrid is bit-identical to the DuckDB oracle BY
-    CONSTRUCTION even under a 2^-60 prefix collision: the oracle also
-    dedups strings first (``list_distinct`` on shingle text) and hashes
-    after, whereas the ``"arrow"`` int64 kernel dedups the hashes — the
-    three engines only diverge if two distinct shingles of one document
-    collide in 60 bits.  Measured (sf1 synth, 50k docs, interleaved
-    min-of-3, BENCH/ngram_engine_ab.py): the shingle MAP STAGE alone is
-    2.0× faster hybrid (3.41 s vs 6.85 s) — the hashlib loop moves to
-    JVM codegen digest; end-to-end the sf1 wall ties (~10 s both) because
-    the local self-join dominates, but the map stage is the term that
-    scales with corpus size, hence the default."""
-    if engine == "hybrid" and hash_shingles:
-        shingle_udf = _shingles_udf(n, hashed=False)
-        base = df.select(
-            F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-        )
-        exploded = base.select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.explode("r.sh").alias("shingle_str"),
-        ).select(
-            "id", "n_sh",
-            F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
-            .cast("long").alias("shingle"),
-        ).repartition(F.col("shingle"))
-    elif engine == "expr":
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                _shingle_structs_expr(F.col(text_col), n, hash_shingles)
-            ).alias("r"),
-        )
-        exploded = base.select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.col("r.shingle").alias("shingle"),
-        ).repartition(F.col("shingle"))
-    else:
-        shingle_udf = _shingles_udf(n, hashed=hash_shingles)
-        base = df.select(
-            F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-        )
-        exploded = base.select(
-            "id", F.col("r.n_sh").alias("n_sh"),
-            F.explode("r.sh").alias("shingle"),
-        ).repartition(F.col("shingle"))
-    if max_shingle_df is not None:
-        from pyspark.sql import Window
-
-        # whole-partition window count over the shingle partitioning the
-        # self-join below reuses — no extra shuffle
-        w = Window.partitionBy("shingle")
-        exploded = exploded.withColumn("df", F.count("*").over(w)).where(
-            F.col("df") <= max_shingle_df
-        ).drop("df")
-    a = exploded.select(
-        F.col("shingle"),
-        F.col("id").alias("id_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = exploded.select(
-        F.col("shingle"),
-        F.col("id").alias("id_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count("*").alias("inter"))
+    - ``"hybrid"`` (default) splits the work along the cheap/expensive
+      seam: the Arrow kernel emits distinct shingle STRINGS (tokenize +
+      join + dict.fromkeys — pure C string ops, no hashlib), and the
+      60-bit md5 lands in the JVM as ordinary codegen expressions on the
+      EXPLODED rows (``conv(substr(md5(s),1,15),16,10)`` — no
+      higher-order lambda), in the same stage as the explode.  Like the
+      DuckDB oracle it dedups strings first and hashes after, so it is
+      bit-identical to the oracle by construction even under a prefix
+      collision.  Measured (sf1 synth, 50k docs, interleaved min-of-3,
+      BENCH/BASELINE.md): the shingle MAP STAGE is 2.0× faster than an
+      all-Python kernel that hashes with hashlib (3.41 s vs 6.85 s).
+    - ``"expr"`` runs pure Catalyst higher-order expressions via
+      :func:`_shingle_structs_expr` — no Python worker in the plan.
+      Catalyst evaluates higher-order lambdas INTERPRETED (one tree walk
+      per element, with a per-shingle md5→conv→substring sub-tree): it
+      measured 4-8× slower at sf0.1 (round 5: 7.7-21.8 s vs 2.0-2.9 s).
+      It stays as a cross-engine differential validator, not a
+      performance option.  It dedups hashes rather than strings, so the
+      two engines diverge only if two distinct shingles of one document
+      collide in 60 bits."""
+    return (
+        _shingle_overlaps(df, text_col, id_col, n, max_shingle_df, engine)
         .withColumn(
             "jaccard",
             F.round(
@@ -917,7 +871,6 @@ def ngram_jaccard_pairs(
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return pairs
 
 
 def containment_pairs(
@@ -959,37 +912,7 @@ def containment_pairs(
     boilerplate-hot-shingle contract as ngram_jaccard_pairs — at web
     scale, pass a finite cap.
     """
-    shingle_udf = _shingles_udf(n, hashed=False)
-    base = df.select(
-        F.col(id_col).alias("id"), shingle_udf(F.col(text_col)).alias("r")
-    )
-    exploded = base.select(
-        "id", F.col("r.n_sh").alias("n_sh"),
-        F.explode("r.sh").alias("shingle_str"),
-    ).select(
-        "id", "n_sh",
-        F.conv(F.substring(F.md5("shingle_str"), 1, 15), 16, 10)
-        .cast("long").alias("shingle"),
-    ).repartition(F.col("shingle"))
-    if max_shingle_df is not None:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("shingle")
-        exploded = exploded.withColumn("df", F.count("*").over(w)).where(
-            F.col("df") <= max_shingle_df
-        ).drop("df")
-    a = exploded.select(
-        "shingle", F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")
-    )
-    b = exploded.select(
-        "shingle", F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")
-    )
-    undirected = (
-        a.join(b, "shingle")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b", "n_a", "n_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    undirected = _shingle_overlaps(df, text_col, id_col, n, max_shingle_df)
     directed = undirected.select(
         F.explode(
             F.array(
@@ -1657,69 +1580,6 @@ def verified_neardup_pairs(
     return scored.where(F.col("sim_micro") >= sim_threshold_micro)
 
 
-def _minhash_sig_affine_udf(n_perms: int, rows_per_band: int, n: int = 3):
-    """Signature-AND-bands variant of :func:`_minhash_bands_affine_udf`:
-    one kernel evaluation yields the distinct-shingle count, the full
-    ``n_perms`` min-signature (for estimator math) and the LSH band keys
-    (for candidate generation) — so the signature table is computed
-    once, the way a production dedup materializes it."""
-    import hashlib
-
-    import numpy as np
-
-    a_l, b_l = _affine_params(n_perms)
-    a = np.asarray(a_l, dtype=np.int64)
-    b = np.asarray(b_l, dtype=np.int64)
-    n_bands = n_perms // rows_per_band
-
-    @F.pandas_udf(
-        "struct<n_sh: int, sig: array<long>, bands: array<string>>"
-    )
-    def sig_bands(texts: pd.Series) -> pd.DataFrame:
-        ns, sigs_out, bands_out = [], [], []
-        for text in texts:
-            toks = _java_ws_tokens(text or "")
-            if len(toks) < n:
-                ns.append(0)
-                sigs_out.append([])
-                bands_out.append([])
-                continue
-            sh = {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
-            h32 = np.fromiter(
-                (
-                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-                    for s in sh
-                ),
-                dtype=np.int64, count=len(sh),
-            )
-            mins = _affine_mins_chunked(h32, a, b)
-            ns.append(len(sh))
-            sigs_out.append([int(v) for v in mins])
-            bands_out.append(
-                [
-                    hashlib.md5(
-                        "|".join(
-                            str(int(v))
-                            for v in mins[
-                                bi * rows_per_band:(bi + 1) * rows_per_band
-                            ]
-                        ).encode("utf-8")
-                    ).hexdigest()
-                    for bi in range(n_bands)
-                ]
-            )
-        return pd.DataFrame({"n_sh": ns, "sig": sigs_out, "bands": bands_out})
-
-    # guide §4.4: the caller filters on n_sh (a field of this UDF's
-    # output), and the optimizer pushes that filter below any exchange by
-    # DUPLICATING the UDF — the signature kernel then runs twice, once
-    # below the parallelism-floor exchange on the single input split
-    # (measured: the whole containment_est wall).  Marking it
-    # non-deterministic forbids the duplication; the value is of course
-    # deterministic, only the optimizer's freedom changes.
-    return sig_bands.asNondeterministic()
-
-
 def containment_est_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1770,6 +1630,10 @@ def containment_est_pairs(
     banded = sigs.select(
         "id", F.posexplode("bands").alias("band_no", "band_key")
     )
+    # a conditional join over the checkpointed signatures, not
+    # minhash_candidate_pairs' repartition-and-self-join: that form costs
+    # containment_est one more job (7 → 8 in a traced perfbench
+    # corpus_queries run)
     pairs = (
         banded.alias("a")
         .join(

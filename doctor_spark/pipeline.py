@@ -175,7 +175,6 @@ def run_extraction_pipeline(
     partition_output_by: str | None = "crawl_date",
     sample_band: tuple[float, float] | None = None,
     sample_salt: str = "",
-    output_file_buckets: int | None = None,
 ) -> dict:
     """Run the full pipeline; returns summary counters.
 
@@ -265,27 +264,6 @@ def run_extraction_pipeline(
         # Iceberg warc_ts day-partition spec; at 10^12 rows this is the
         # difference between scanning one day's and three years' output)
         writer = extracted.withColumn("crawl_date", crawl_date)
-        if output_file_buckets:
-            # CLUSTER/OBJECT-STORE MODE: route rows to writers BY DATE
-            # before the partitioned write.  The shuffle path above
-            # already clusters by date before extraction (at most
-            # tasks + days − 1 files), so this only matters on the
-            # map-only path, where every task opens a writer for every
-            # date it sees — T tasks × D dates output files, which at
-            # 1000 executors × 1000 days is a
-            # 10^6-small-files-per-day explosion (and a committer-rename
-            # storm on S3-style stores).  A deterministic url-hash bucket
-            # caps files at buckets/date while keeping per-date write
-            # parallelism; partition_id is stamped upstream so lineage
-            # still names the extraction task that produced each row.
-            # Default OFF: measured locally (2.88M docs, local[16]) the
-            # extra full-output shuffle costs more than the committer
-            # savings on a single-node filesystem (74 s → 130 s wall);
-            # the trade reverses exactly where the file explosion bites.
-            writer = writer.repartition(
-                F.col("crawl_date"),
-                F.pmod(F.xxhash64("url"), F.lit(output_file_buckets)),
-            )
         writer.write.mode("append").partitionBy("crawl_date").parquet(results_path)
     elif partition_output_by:
         writer.write.mode("append").partitionBy(partition_output_by).parquet(
@@ -424,11 +402,6 @@ def main() -> None:
                          "corpus to extract (train/val carving)")
     ap.add_argument("--sample-salt", default="",
                     help="salt for --sample-band hashing")
-    ap.add_argument("--output-file-buckets", type=int, default=None,
-                    help="pre-write repartition to N url-hash buckets per "
-                         "output date partition on the map-only path "
-                         "(real-cluster committer pressure; costs a "
-                         "shuffle — off by default)")
     args = ap.parse_args()
 
     from .session import get_spark
@@ -450,7 +423,6 @@ def main() -> None:
         recap_mode=args.recap, strip_margin=args.strip_margin,
         sample_band=tuple(args.sample_band) if args.sample_band else None,
         sample_salt=args.sample_salt,
-        output_file_buckets=args.output_file_buckets,
     )
     summary["wall_sec"] = round(time.monotonic() - t0, 2)
     if args.verify:

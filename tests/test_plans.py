@@ -106,7 +106,13 @@ def test_minhash_udf_tokens_match_jvm_on_unicode_ws(spark):
     """The Arrow band kernel must tokenize exactly like the JVM tokens()
     path (Java \\s = ASCII): NBSP / thin-space / \\x85 are NOT separators;
     tab/newline are.  Regression for the python str.split() divergence."""
-    from doctor_spark.operators.dedup import minhash_band_keys, _minhash_bands_udf
+    from doctor_spark.operators.dedup import (
+        _minhash_bands_udf,
+        _minhash_sig_affine_udf,
+        _shingles_udf,
+        minhash_band_keys,
+        shingles,
+    )
     from pyspark.sql import functions as F
 
     texts = [
@@ -131,6 +137,19 @@ def test_minhash_udf_tokens_match_jvm_on_unicode_ws(spark):
         else:
             assert tuple(r.bands) == expect, r.doc_id
 
+    # every kernel on the shared shingle helper counts the JVM's shingles
+    sig = _minhash_sig_affine_udf(128, 8)
+    hashed = _shingles_udf(3, hashed=True)
+    counts = df.select(
+        "doc_id",
+        F.size(shingles(F.col("text"))).alias("jvm"),
+        sig(F.col("text"))["n_sh"].alias("affine"),
+        hashed(F.col("text"))["n_sh"].alias("hashed"),
+    ).collect()
+    for r in counts:
+        assert r.jvm > 0, r.doc_id
+        assert r.affine == r.jvm and r.hashed == r.jvm, r
+
 
 def test_minhash_production_width_plan_and_fanout(spark):
     """MinHash at the production operating point (128 permutations, 16
@@ -139,7 +158,7 @@ def test_minhash_production_width_plan_and_fanout(spark):
     (ReusedExchange) — signatures are computed once per doc, and the band
     fan-out is exactly n_bands rows/doc, not n_seeds."""
     from doctor_spark.operators.dedup import (
-        _minhash_bands_affine_udf,
+        _minhash_sig_affine_udf,
         minhash_candidate_pairs,
     )
 
@@ -153,8 +172,8 @@ def test_minhash_production_width_plan_and_fanout(spark):
     # once, not per join side
     assert final.count("ArrowEvalPython") == 1, final
     # fan-out: 16 band keys per (long-enough) doc
-    bands = _minhash_bands_affine_udf(128, 8)
-    one = docs.limit(1).select(F.size(bands(F.col("text"))).alias("n"))
+    sig = _minhash_sig_affine_udf(128, 8)
+    one = docs.limit(1).select(F.size(sig(F.col("text"))["bands"]).alias("n"))
     assert one.collect()[0]["n"] in (0, 16)
 
 
@@ -187,8 +206,8 @@ def test_ngram_jaccard_shingle_df_cap(spark):
 
 def test_ngram_shingle_engines_bit_identical(spark):
     """The pure-Catalyst shingle engine (``engine="expr"``) must produce
-    the exact pair set of the Arrow kernel, for both hashed-int64 and
-    string shingle keys — the cross-engine differential that pins the
+    the exact pair set of the default hybrid engine (Arrow shingle
+    strings, JVM md5 keys) — the cross-engine differential that pins the
     Arrow kernel's tokenization/hash semantics to Spark's own expression
     evaluator (in addition to the DuckDB oracle).  Perf note: expr
     measured 4-8x SLOWER at sf0.1 (interpreted higher-order lambdas);
@@ -205,16 +224,12 @@ def test_ngram_shingle_engines_bit_identical(spark):
         (6, "unicode café naïve résumé tokens plus filler words"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for hashed in (True, False):
-        got = {}
-        for engine in ("arrow", "expr", "hybrid"):
-            pairs = ngram_jaccard_pairs(
-                df, threshold=0.1, hash_shingles=hashed, engine=engine
-            ).collect()
-            got[engine] = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs)
-        assert got["arrow"] == got["expr"], (hashed, got)
-        assert got["arrow"] == got["hybrid"], (hashed, got)
-        assert len(got["arrow"]) >= 2  # (0,1) near-dup and (0,5) exact
+    got = {}
+    for engine in ("expr", "hybrid"):
+        pairs = ngram_jaccard_pairs(df, threshold=0.1, engine=engine).collect()
+        got[engine] = sorted((r.id_a, r.id_b, r.jaccard) for r in pairs)
+    assert got["expr"] == got["hybrid"], got
+    assert len(got["hybrid"]) >= 2  # (0,1) near-dup and (0,5) exact
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
